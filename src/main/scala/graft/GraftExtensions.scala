@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.{DotProduct, DuplicateNgramFraction, MinHashSignature, NearestCellsDyn, NfcNormalize, SimHash64, SrpBucket, WordShingleHashes}
+import graft.functions.{DotProduct, DuplicateNgramFraction, FastCharLength, MinHashSignature, NearestCellsDyn, NfcNormalize, SimHash64, SrpBucket, WordShingleHashes}
 
 /** SQL registration for graft's custom Catalyst expressions, so the sketch
   * functions are usable from `spark.sql(...)` and `expr(...)` strings:
@@ -20,13 +20,17 @@ import graft.functions.{DotProduct, DuplicateNgramFraction, MinHashSignature, Ne
   *
   * Two entry points: `GraftFunctions.register(spark)` for an existing
   * session, or `--conf spark.sql.extensions=graft.GraftExtensions` at
-  * spark-submit time (the standard extension hook).
+  * spark-submit time (the standard extension hook). The extension also
+  * injects the [[FastCharLength]] optimizer rule, which the engine's entry
+  * points otherwise install on their session themselves.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.registrations.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    e.injectOptimizerRule(_ => FastCharLength)
+  }
 }
 
 object GraftFunctions {

@@ -1190,12 +1190,13 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_stream").toString
-      // 32-file staging at 8 files per trigger: the SAME 4 micro-batches
-      // as the r7 8-file/2-per-trigger shape (batch boundaries and the
-      // graded output are identical), but each batch's scan arrives in 8
-      // splits instead of 2 — the signal projection is regex-dense per
-      // row, and 2-task batches serialized it (StageProbe r8: ~0.5 s of
-      // task time on 2 tasks per batch)
+      // 32-file staging at 8 files per trigger: the SAME batch COUNT (4
+      // micro-batches) as the r7 8-file/2-per-trigger shape, and the same
+      // graded output — but not the same batch boundaries: which rows land
+      // in which batch follows the repartition, not the old file split.
+      // Each batch's scan arrives in 8 splits instead of 2 — the signal
+      // projection is regex-dense per row, and 2-task batches serialized
+      // it (StageProbe r8: ~0.5 s of task time on 2 tasks per batch)
       docs.repartition(32).write.mode("overwrite").parquet(s"$tmp/in")
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 8).parquet(s"$tmp/in")
@@ -1375,9 +1376,12 @@ object SparkEntry {
       // cast up front: the parquet column reads as TIMESTAMP_NTZ, whose
       // collected form (LocalDateTime) neither getTimestamp nor the
       // MemoryStream tuple encoder accepts; session tz is UTC so the cast
-      // is instant-preserving
+      // is instant-preserving. Null-ts rows are dropped here: they have no
+      // window to count in (Spark's window assignment drops them too), and
+      // the slicing below reads every collected row's time.
       val ev = t(s, dir, "events")
         .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
+        .where(col("ts").isNotNull)
       // ONE harness-side collect (MemoryStream fixture feeding, sf-bounded)
       // instead of a min/max aggregate plus three per-slice collects that
       // each re-scanned the table — min/max and the slice membership are

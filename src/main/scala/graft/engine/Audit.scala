@@ -179,6 +179,7 @@ object Audit {
       auditDir: String, runId: String,
       contentDrift: Boolean = true): Option[ValidationResult] = {
     val spark = df.sparkSession
+    graft.functions.FastCharLength.install(spark)
     val audit = new AuditLog(auditDir, spark)
     val done0 = audit.validatedParts()
 
@@ -197,10 +198,10 @@ object Audit {
     // uniqueness verdict's `checked` figure, so it always describes
     // exactly the rows the full-table uniqueness pass scanned — never a
     // stale audit reconstruction.
-    val (done, liveTotal, drifted, liveFp): (Set[String], Option[Long],
-        Set[String], Map[String, String]) =
+    val (done, liveParts, liveTotal, drifted, liveFp): (Set[String],
+        Option[Set[String]], Option[Long], Set[String], Map[String, String]) =
       if (done0.isEmpty)
-        (done0, None, Set.empty[String], Map.empty[String, String])
+        (done0, None, None, Set.empty[String], Map.empty[String, String])
       else {
         val fpCol =
           if (contentDrift) contentFp(df) else lit(null).cast("string")
@@ -222,18 +223,29 @@ object Audit {
           }
         }
         audit.supersede(dr)
-        (done0 -- dr, Some(live.valuesIterator.map(_._1).sum), dr,
-          live.collect { case (p, (_, Some(f))) => p -> f })
+        (done0 -- dr, Some(live.keySet), Some(live.valuesIterator.map(_._1).sum),
+          dr, live.collect { case (p, (_, Some(f))) => p -> f })
       }
 
-    // Partition pruning: the filter on partExpr is pushed to the scan, so
-    // already-validated daily partitions are never read again. NULL-part
-    // rows key as "(null)" — the same keying every pass uses — so they are
-    // validated exactly once and a NULL never poisons the isin (whose SQL
-    // semantics would otherwise drop every non-matching row).
+    // The pending filter skips already-validated partitions. It prunes
+    // files at the scan only when partExpr is the table's partition
+    // (directory) column; over a derived expression such as
+    // date_format(warc_ts, ...) every file is still read and validated
+    // rows are dropped after decode. NULL-part rows key as "(null)" — the
+    // same keying every pass uses — so they are validated exactly once and
+    // a NULL never poisons the isin (whose SQL semantics would otherwise
+    // drop every non-matching row).
     val pending =
       if (done.isEmpty) df
       else df.where(!partKey.isin(done.toSeq: _*))
+    // A resume's drift pass has already collected every live partition
+    // under the same partKey, so whether anything is pending is a set
+    // difference, not another scan of the table. A first run asks the
+    // source.
+    val nothingPending = liveParts match {
+      case Some(parts) => (parts -- done).isEmpty
+      case None => pending.isEmpty
+    }
 
     val uniqueRules = rules.collect { case r: graft.rules.Unique => r }
     // A DELETE-only drift leaves no pending rows yet still invalidates the
@@ -244,7 +256,7 @@ object Audit {
     // resume a true no-op.
     val globalRefreshNeeded = drifted.nonEmpty && uniqueRules.nonEmpty
 
-    if (pending.isEmpty && !globalRefreshNeeded) None
+    if (nothingPending && !globalRefreshNeeded) None
     else {
       val rowVios = ValidationEngine.rowPass(pending, rules, dims, cfg)
       val uniqVios = uniqueRules.map(r =>

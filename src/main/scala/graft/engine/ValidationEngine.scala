@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.FastCharLength
 import graft.rules._
 
 /** Orchestrates a full validation run (SURVEY.md §7 pillars 2-3):
@@ -88,6 +89,7 @@ object ValidationEngine {
     */
   def rowPass(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig): DataFrame = {
+    FastCharLength.install(df.sparkSession)
     val rowRules = rules.collect { case r: RowRule => r }
     val refRules = rules.collect { case r: Referential => r }
 
@@ -143,7 +145,7 @@ object ValidationEngine {
   def run(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame] = Map.empty,
       cfg: EngineConfig): ValidationResult = {
-
+    FastCharLength.install(df.sparkSession)
     val uniqueRules = rules.collect { case r: Unique => r }
 
     val rowVios = rowPass(df, rules, dims, cfg)
@@ -180,7 +182,7 @@ object ValidationEngine {
     * One decode of the (wide) source; the projection carries ~tens of
     * fixed-width bytes per row — no document bodies, no nested types.
     */
-  private def buildProjection(df: DataFrame, rules: Seq[ValidationRule],
+  private[graft] def buildProjection(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig): DataFrame = {
     val rowRules = rules.collect { case r: RowRule => r }
     val refRules = rules.collect { case r: Referential => r }
@@ -268,6 +270,7 @@ object ValidationEngine {
   def runToSink(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig,
       sinkDir: String): ValidationResult = {
+    FastCharLength.install(df.sparkSession)
     if (cfg.stage == "multi-scan")
       return runToSinkMultiScan(df, rules, dims, cfg, sinkDir)
     require(cfg.stage == "parquet" || cfg.stage == "memory",

@@ -15,9 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * not known to be ASCII.
   *
   * Wraps `java.text.Normalizer` (JDK NFC) as a null-safe expression with
-  * two fast paths: pure-ASCII input (numBytes == numChars on the
-  * UTF8String — NFC is the identity there) returns the input with NO
-  * String materialization at all, and non-ASCII input that
+  * two fast paths: pure-ASCII input (character count == byte count, by
+  * [[CharLength]], which tests eight bytes at a time on ASCII — NFC is
+  * the identity there) returns the input with NO String materialization
+  * at all, and non-ASCII input that
   * `isNormalized` reports clean skips the normalized-copy allocation
   * (the String conversion for the check itself is unavoidable).
   * CodegenFallback is deliberate: the body is one JDK library call, not
@@ -33,7 +34,7 @@ case class NfcNormalize(child: Expression)
   override def nullSafeEval(input: Any): Any = {
     val u = input.asInstanceOf[UTF8String]
     // ASCII (1 byte per char) is NFC by definition: skip even the String
-    if (u.numBytes == u.numChars) return u
+    if (CharLength.of(u) == u.numBytes) return u
     val s = u.toString
     if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC)) u
     else UTF8String.fromString(

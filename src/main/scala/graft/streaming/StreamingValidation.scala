@@ -29,6 +29,7 @@ object StreamingValidation {
       dims: Map[String, DataFrame], cfg: EngineConfig,
       violationsSink: String, checkpoint: String,
       withinBatchUnique: Boolean = true): DataStreamWriter[Row] = {
+    graft.functions.FastCharLength.install(stream.sparkSession)
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)

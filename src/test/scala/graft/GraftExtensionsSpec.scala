@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
+import graft.functions.FastCharLength
 
 class GraftExtensionsSpec extends SparkSuite {
   import spark.implicits._
@@ -47,5 +49,14 @@ class GraftExtensionsSpec extends SparkSuite {
                array(array(1.0d, 0.0d), array(0.0d, 1.0d)), 2) AS c""")
       .as[Seq[Int]].head()
     assert(cells === Seq(0, 1)) // nearest fine centroid first
+  }
+
+  test("the extension injects the FastCharLength optimizer rule") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    // buildOptimizerRules is private[sql] in Scala but public in bytecode
+    val build = ext.getClass.getMethods.find(_.getName == "buildOptimizerRules").get
+    val rules = build.invoke(ext, spark).asInstanceOf[Seq[AnyRef]]
+    assert(rules === Seq(FastCharLength))
   }
 }

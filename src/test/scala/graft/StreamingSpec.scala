@@ -258,6 +258,22 @@ class StreamingSpec extends SparkSuite {
     assert(out === Set(("valid_type", 2L)))
   }
 
+  test("q_stream_windowed skips null-ts events instead of failing") {
+    // an events table with null timestamps, one of them on a bad enum
+    // value: it has no window to count in, so it is not counted anywhere
+    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
+    val dir = Files.createTempDirectory("windowed_null_ts").toString
+    Seq[(java.sql.Timestamp, String)](
+      (ts(1), "bogus"), (ts(2), "click"), (ts(15), "bogus"), (ts(16), "bogus"),
+      (ts(40), "view"), (null, "bogus"), (null, "click"))
+      .toDF("ts", "event_type").write.parquet(s"$dir/events.parquet")
+    val out = SparkEntry.queries("q_stream_windowed")(spark, dir)
+      .as[(java.sql.Timestamp, java.sql.Timestamp, String, Long)].collect().toSeq
+    assert(out === Seq(
+      (ts(0), ts(10), "valid_type", 1L),
+      (ts(10), ts(20), "valid_type", 2L)))
+  }
+
   test("streaming dedup drops cross-batch re-crawls within the watermark, state stays 8-byte keys") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
