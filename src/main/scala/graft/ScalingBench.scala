@@ -35,8 +35,6 @@ object ScalingBench {
     // row width: 0 = narrow generator default (~400 B); e.g. 16384 pads
     // text to ~16 KB (+html copy) for Common-Crawl-realistic rows
     val padTo = if (args.length > 2) args(2).toInt else 0
-    // runToSink strategy: parquet (single-decode stage) | memory | multi-scan
-    val stage = if (args.length > 3) args(3) else "parquet"
 
     // Wide rows blow up the vectorized reader's on-heap batches: the
     // default 4096-row batch at ~33 KB/row is ~135 MB PER TASK — at 4
@@ -97,8 +95,7 @@ object ScalingBench {
       partExpr = "date_format(warc_ts, 'yyyy-MM-dd')",
       statsExprs = PagesRules.statsExprs,
       histograms = Seq(("text_len", "length(text)", 25.0)),
-      quantilesFor = Seq("text_len"),
-      stage = stage)
+      quantilesFor = Seq("text_len"))
 
     // ---- timed: the full validation job, ONE decode of the source
     val sink = s"/tmp/graft_bench_out_$parallelism"
@@ -117,7 +114,7 @@ object ScalingBench {
     val rate = nRows / elapsed
     val cpuSec = metrics.cpuSec
     val json =
-      s"""{"master":"$master","parallelism":$parallelism,"rows":$nRows,"pad_to":$padTo,"stage":"$stage","batch_rows":$batchRows,""" +
+      s"""{"master":"$master","parallelism":$parallelism,"rows":$nRows,"pad_to":$padTo,"batch_rows":$batchRows,""" +
       s""""elapsed_sec":$elapsed,"rows_per_sec":$rate,""" +
       s""""cpu_sec":$cpuSec,"cpu_us_per_row":${cpuSec * 1e6 / nRows},""" +
       s""""executor_run_sec":${metrics.runSec},"gc_sec":${metrics.gcSec},""" +

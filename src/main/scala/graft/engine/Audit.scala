@@ -258,13 +258,7 @@ object Audit {
 
     if (nothingPending && !globalRefreshNeeded) None
     else {
-      val rowVios = ValidationEngine.rowPass(pending, rules, dims, cfg)
-      val uniqVios = uniqueRules.map(r =>
-        Uniqueness.duplicateKeyViolations(df, r)) // full table
-      val violations = (Seq(rowVios) ++ uniqVios).reduce(_.unionByName(_))
-      val profiles = StatsPass.profile(pending, cfg)
-      val checked = profiles.groupBy(col("part"))
-        .agg(max(col("rowCount")).as("checked"))
+      // the full-table uniqueness pass's checked count
       val globalChecked =
         if (uniqueRules.isEmpty) None
         else liveTotal.orElse {
@@ -279,8 +273,10 @@ object Audit {
           // liveTotal is authoritative.
           Some(pending.count())
         }
-      val verdicts0 = ValidationEngine.assembleVerdicts(
-        spark, rules, violations, checked, globalChecked)
+      // row, referential and stats passes over pending; uniqueness over
+      // the full table
+      val res = ValidationEngine.runPass(pending, df, globalChecked,
+        rules, dims, cfg)
       // Stamp each data partition's verdict rows with its content
       // fingerprint — the resume's drift compare reads it back. Resumes
       // already paid for the fingerprints in the drift pass above; only a
@@ -295,15 +291,14 @@ object Audit {
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       val verdicts =
         if (fpByPart.isEmpty)
-          verdicts0.withColumn("content_fp", lit(null).cast("string"))
+          res.verdicts.withColumn("content_fp", lit(null).cast("string"))
         else {
           val fpDf = spark.createDataFrame(fpByPart.toSeq)
             .toDF("part", "content_fp")
-          verdicts0.join(broadcast(fpDf), Seq("part"), "left")
+          res.verdicts.join(broadcast(fpDf), Seq("part"), "left")
         }
-      val res = ValidationResult(violations, verdicts, profiles)
-      audit.append(res.verdicts, runId)
-      Some(res)
+      audit.append(verdicts, runId)
+      Some(res.copy(verdicts = verdicts))
     }
   }
 }

@@ -20,15 +20,22 @@ import graft.rules._
   *  - stats/drift: partial aggregation (map-side combine) then a tiny
   *    shuffle of per-(partition, column) aggregates;
   *  - verdicts/violations are tiny relative to input; they shuffle freely.
+  *
+  * Profiles: with `statsExprs` set, `run` and `runToSink` both profile
+  * exactly those expressions. With none set, `run` profiles every source
+  * column and `runToSink` profiles only the engine key — staging every
+  * column (document bodies included) for default stats would defeat its
+  * compact single-decode stage.
   */
 final case class EngineConfig(
     keyExpr: String,            // SQL expr for the natural key (e.g. "url")
     partExpr: String,           // SQL expr for the partition bucket
                                 // (e.g. "date_format(warc_ts, 'yyyy-MM-dd')")
     broadcastDims: Boolean = true,
-    // (name, sql) pairs to profile in the stats pass; empty = every column
-    // as-is. Pass derived exprs (e.g. "length(text)") instead of megabyte
-    // string bodies — min/max/HLL over full documents is wasted IO+CPU.
+    // (name, sql) pairs to profile in the stats pass; empty = the entry
+    // point's default (see above). Pass derived exprs (e.g.
+    // "length(text)") instead of megabyte string bodies — min/max/HLL
+    // over full documents is wasted IO+CPU.
     statsExprs: Seq[(String, String)] = Nil,
     // (name, sql, binWidth) fixed-width histograms for the drift checks,
     // computed from the same single scan in runToSink
@@ -38,22 +45,7 @@ final case class EngineConfig(
     // no extra scan); e.g. Seq("text_len")
     quantilesFor: Seq[String] = Nil,
     quantileProbs: Seq[Double] = Seq(0.01, 0.25, 0.5, 0.75, 0.99),
-    quantileAccuracy: Int = 10000,
-    // runToSink strategy — how many times the (possibly wide) source is
-    // decoded:
-    //  - "parquet" (default): ONE decode into a compact all-scalar
-    //    projection staged as parquet; every phase re-reads the pruned
-    //    stage. Violations are carried as a BITMASK (one long per 64
-    //    rules), not an array<struct> — round 1 measured Spark's columnar
-    //    cache serializing the nested array at ~0.8 ms/row, which made the
-    //    old projection path 3x slower than re-scanning; literal rule
-    //    metadata is re-attached from the mask at explode time for free.
-    //  - "memory": same projection, persisted MEMORY_AND_DISK instead of
-    //    staged (saves the stage write; costs executor memory at scale).
-    //  - "multi-scan": each phase is its own column-pruned scan of the
-    //    source — wins only when the pruned re-reads are cheaper than the
-    //    stage write (narrow rows on fast local storage).
-    stage: String = "parquet")
+    quantileAccuracy: Int = 10000)
 
 final case class ValidationResult(
     violations: DataFrame,      // graft.model.Violation shape
@@ -80,62 +72,16 @@ object ValidationEngine {
   val violationCols: Seq[String] =
     Seq("key", "part", "rule_id", "path", "message", "severity")
 
-  /** Row-rule + referential violations in ONE scan.
-    *
-    * Referential rules (SURVEY.md §2.3 J5/J6) are folded into the same
-    * projection as a broadcast LEFT join + null-marker test — the Spark
-    * analog of the reference's `fix_nested_object` FK resolution
-    * (`cerberus/api/serializers.py:53-72`), done set-at-a-time.
+  /** Row-rule + referential violations in ONE scan: the bitmask
+    * projection's key, part and `_vb*` words, exploded back into violation
+    * rows (see [[buildProjection]] and [[bitsToViolations]]).
     */
   def rowPass(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig): DataFrame = {
     FastCharLength.install(df.sparkSession)
-    val rowRules = rules.collect { case r: RowRule => r }
-    val refRules = rules.collect { case r: Referential => r }
-
-    // Fold referential dims in as broadcast existence markers.
-    var joined = df
-    val refConds: Seq[(Referential, Column)] = refRules.zipWithIndex.map {
-      case (r, i) =>
-        val dim = dims.getOrElse(r.dim,
-          throw new IllegalArgumentException(s"missing dim table '${r.dim}' for rule ${r.ruleId}"))
-        val marker = s"_ref_ok_$i"
-        val keyC = r.keyExprSql.map(expr).getOrElse(col(r.path))
-        val d = dim.select(col(r.dimColumn).as(s"_ref_key_$i")).distinct()
-          .withColumn(marker, lit(true))
-        val dimSide = if (cfg.broadcastDims) broadcast(d) else d
-        joined = joined.join(dimSide, keyC === col(s"_ref_key_$i"), "left")
-        (r, keyC.isNotNull && col(marker).isNull)
-    }
-
-    val rowStructs = rowRules.map(RuleCompiler.violationStruct)
-    val refStructs = refConds.map { case (r, cond) =>
-      when(cond, struct(
-        lit(r.ruleId).as("rule_id"),
-        lit(r.path).as("path"),
-        lit(RuleCompiler.message(r)).as("message"),
-        lit(r.severity).as("severity")))
-    }
-    val allStructs = rowStructs ++ refStructs
-    // CreateArray + Generate + Filter are all whole-stage-codegen'd; the
-    // tempting alternative — filter(array(...), _.isNotNull) — is a
-    // higher-order function, which is CodegenFallback and would drop the
-    // ENTIRE projection (regexes included) to interpreted evaluation, and
-    // a size(...) > 0 pre-filter would evaluate the rule array twice.
-    val vioArr =
-      if (allStructs.isEmpty)
-        array().cast("array<struct<rule_id:string,path:string,message:string,severity:string>>")
-      else array(allStructs: _*)
-
-    joined
-      .select(
-        coalesce(expr(cfg.keyExpr).cast("string"), lit("(null)")).as("key"),
-        coalesce(expr(cfg.partExpr).cast("string"), lit("(null)")).as("part"),
-        explode(vioArr).as("v"))
-      .where(col("v").isNotNull)
-      .select(col("key"), col("part"),
-        col("v.rule_id").as("rule_id"), col("v.path").as("path"),
-        col("v.message").as("message"), col("v.severity").as("severity"))
+    // bitsToViolations reads only _key, _part and the _vb* words: the
+    // optimizer prunes the uniqueness hashes and stats inputs away
+    bitsToViolations(buildProjection(df, rules, dims, cfg), bitOrderedMeta(rules))
   }
 
   /** Full run: row+referential pass, uniqueness pass, stats profile,
@@ -144,36 +90,37 @@ object ValidationEngine {
     */
   def run(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame] = Map.empty,
-      cfg: EngineConfig): ValidationResult = {
-    FastCharLength.install(df.sparkSession)
-    val uniqueRules = rules.collect { case r: Unique => r }
+      cfg: EngineConfig): ValidationResult =
+    runPass(df, df, None, rules, dims, cfg)
 
-    val rowVios = rowPass(df, rules, dims, cfg)
-    val uniqVios = uniqueRules.map(r =>
-      Uniqueness.duplicateKeyViolations(df, r))
-    val violations = (Seq(rowVios) ++ uniqVios).reduce(_.unionByName(_))
-
-    val profiles = StatsPass.profile(df, cfg)
-
-    // Verdicts: per-(part, rule) violation counts joined to per-part checked
-    // counts (from the stats pass — no extra scan of the source). Global
-    // rules (uniqueness) get one verdict row scoped "(global)" with
-    // checked = total rows.
-    val checked = profiles
-      .groupBy(col("part")).agg(max(col("rowCount")).as("checked"))
-    val verdicts = assembleVerdicts(df.sparkSession, rules, violations, checked)
-
-    ValidationResult(violations, verdicts, profiles)
+  /** [[run]] with the uniqueness pass on its own source: row rules,
+    * referential rules and the profile read `rows`; uniqueness rules read
+    * `uniqueRows`. Incremental resume passes the pending partitions as
+    * `rows` and the full table as `uniqueRows`, with `globalChecked` the
+    * full table's row count (see [[assembleVerdicts]]).
+    */
+  private[engine] def runPass(rows: DataFrame, uniqueRows: DataFrame,
+      globalChecked: Option[Long], rules: Seq[ValidationRule],
+      dims: Map[String, DataFrame], cfg: EngineConfig): ValidationResult = {
+    val rowVios = rowPass(rows, rules, dims, cfg)
+    val uniqVios = rules.collect { case r: Unique =>
+      Uniqueness.duplicateKeyViolations(uniqueRows, r) }
+    val violations = (rowVios +: uniqVios).reduce(_.unionByName(_))
+    // the stats pass doubles as the per-part checked counts: no extra scan
+    val profiles = StatsPass.profile(rows, cfg)
+    ValidationResult(violations, assembleVerdicts(rows.sparkSession, rules,
+      violations, profiles, globalChecked), profiles)
   }
 
   /** Rule metadata (all literals) in BIT ORDER: row rules first, then
     * referential — the contract between [[buildProjection]]'s bitmask and
     * [[bitsToViolations]]'s reconstruction.
     */
-  private def bitOrderedMeta(rowRules: Seq[RowRule],
-      refRules: Seq[Referential]): Seq[(String, String, String, String)] =
-    rowRules.map(r => (r.ruleId, r.path, RuleCompiler.message(r), r.severity)) ++
-      refRules.map(r => (r.ruleId, r.path, RuleCompiler.message(r), r.severity))
+  private def bitOrderedMeta(
+      rules: Seq[ValidationRule]): Seq[(String, String, String, String)] =
+    (rules.collect { case r: RowRule => r } ++
+      rules.collect { case r: Referential => r })
+      .map(r => (r.ruleId, r.path, RuleCompiler.message(r), r.severity))
 
   /** The compact per-row projection everything derives from: key, part,
     * per-rule violation BITMASK (one long per 64 rules — all
@@ -181,6 +128,11 @@ object ValidationEngine {
     * per-row information), uniqueness key columns, stat/histogram inputs.
     * One decode of the (wide) source; the projection carries ~tens of
     * fixed-width bytes per row — no document bodies, no nested types.
+    *
+    * Referential rules (SURVEY.md §2.3 J5/J6) are folded into the same
+    * projection as a broadcast LEFT join + null-marker test — the Spark
+    * analog of the reference's `fix_nested_object` FK resolution
+    * (`cerberus/api/serializers.py:53-72`), done set-at-a-time.
     */
   private[graft] def buildProjection(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig): DataFrame = {
@@ -201,7 +153,7 @@ object ValidationEngine {
       keyC.isNotNull && col(marker).isNull
     }
     // violation bitmask words: bit i of word i/64 set ⇔ rule i fired
-    // (NULL conditions count as not-fired, matching when(cond, struct))
+    // (a NULL condition takes otherwise(0): not fired)
     val conds = rowRules.map(RuleCompiler.violated) ++ refConds
     val bitCols = conds.zipWithIndex
       .groupBy(_._2 / 64).toSeq.sortBy(_._1)
@@ -244,9 +196,7 @@ object ValidationEngine {
     }
     if (structs.isEmpty)
       return proj.sparkSession.emptyDataFrame
-        .select(lit("").as("key"), lit("").as("part"), lit("").as("rule_id"),
-          lit("").as("path"), lit("").as("message"), lit("").as("severity"))
-        .limit(0)
+        .select(violationCols.map(c => lit("").as(c)): _*).limit(0)
     proj
       .select(col("_key"), col("_part"), explode(array(structs: _*)).as("v"))
       .where(col("v").isNotNull)
@@ -257,38 +207,29 @@ object ValidationEngine {
 
   /** Production entry point: run the full pass writing each output to a
     * parquet sink. The wide source (document bodies) is decoded EXACTLY
-    * ONCE into a compact all-scalar projection (cfg.stage = "parquet" |
-    * "memory"); violations, hash-candidate uniqueness, column stats, drift
-    * histograms and verdicts all derive from it. Verdicts are assembled
-    * from the WRITTEN violations (tiny) — never by re-executing the scan.
+    * ONCE into the compact all-scalar [[buildProjection]], staged as
+    * parquet under `sinkDir/_stage`; violations, hash-candidate
+    * uniqueness, column stats, drift histograms and verdicts all derive
+    * from it. Verdicts are assembled from the WRITTEN violations (tiny) —
+    * never by re-executing the scan. The stage is deleted once every
+    * output is written, unless `spark.graft.keepStage` is "true".
     *
-    * Profiles cover exactly `cfg.statsExprs`; with none configured the
-    * staged paths profile only the engine key (run()'s all-columns
-    * default would require staging every source column — see the
-    * statNamed note below).
+    * Profiles cover exactly `cfg.statsExprs`; with none configured only
+    * the engine key is profiled (see [[EngineConfig]]).
     */
   def runToSink(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig,
       sinkDir: String): ValidationResult = {
     FastCharLength.install(df.sparkSession)
-    if (cfg.stage == "multi-scan")
-      return runToSinkMultiScan(df, rules, dims, cfg, sinkDir)
-    require(cfg.stage == "parquet" || cfg.stage == "memory",
-      s"unknown stage strategy '${cfg.stage}'")
     val spark = df.sparkSession
     val uniqueRules = rules.collect { case r: Unique => r }
-    val rowRules = rules.collect { case r: RowRule => r }
-    val refRules = rules.collect { case r: Referential => r }
-    val meta = bitOrderedMeta(rowRules, refRules)
 
-    val projection0 = buildProjection(df, rules, dims, cfg)
-    val projection =
-      if (cfg.stage == "parquet") {
-        // stage the single decode; every downstream phase column-prunes it
-        projection0.write.mode("overwrite").parquet(s"$sinkDir/_stage")
-        spark.read.parquet(s"$sinkDir/_stage")
-      } else
-        projection0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // stage the single decode; every downstream phase column-prunes it.
+    // Round 1 measured Spark's columnar cache serializing a nested
+    // violations array at ~0.8 ms/row; the bitmask stage is all scalars.
+    buildProjection(df, rules, dims, cfg)
+      .write.mode("overwrite").parquet(s"$sinkDir/_stage")
+    val projection = spark.read.parquet(s"$sinkDir/_stage")
 
     try {
       // 1. violations: row+referential (from projection) ∪ uniqueness.
@@ -296,7 +237,7 @@ object ValidationEngine {
       // only; the exact verify re-derives key values from the stage's _key
       // (primary-key rules) or the column-pruned source (composite rules) —
       // document bodies are never decoded twice.
-      val rowVios = bitsToViolations(projection, meta)
+      val rowVios = bitsToViolations(projection, bitOrderedMeta(rules))
       val uniqVios = uniqueRules.zipWithIndex.map { case (r, i) =>
         val dups = Uniqueness.dupHashes(projection
           .where(col(s"_uh_$i").isNotNull)
@@ -326,15 +267,10 @@ object ValidationEngine {
       // 2. stats profile from the SAME projection (shared long-form agg,
       // measures resolved against the staged _s_ scalar columns)
       val named = cfg.statsExprs.map { case (n, _) => (n, col(s"_s_$n")) }
-      // with no statsExprs configured, the staged paths profile the ENGINE
-      // KEY (null rate / approx-distinct of cfg.keyExpr — named by that
-      // expression, not a leaked internal column) and the per-part row
-      // counts verdict assembly needs. This deliberately DIFFERS from
-      // run(), which reads the source directly and defaults to profiling
-      // every source column: staging every column (document bodies
-      // included) just for default stats would defeat the compact
-      // single-decode stage. Callers wanting column stats through the
-      // sink path list them in statsExprs.
+      // with no statsExprs configured, profile the ENGINE KEY (null rate /
+      // approx-distinct of cfg.keyExpr — named by that expression, not a
+      // leaked internal column) and the per-part row counts verdict
+      // assembly needs; see EngineConfig for why this differs from run().
       val statNamed = if (named.nonEmpty) named
         else Seq((cfg.keyExpr, col("_key")))
       val profilesOut =
@@ -374,16 +310,13 @@ object ValidationEngine {
       // 4. verdicts from the written (tiny) outputs
       val violations = spark.read.parquet(s"$sinkDir/violations")
       val profiles = spark.read.parquet(s"$sinkDir/profiles")
-      val checked = profiles.groupBy(col("part"))
-        .agg(max(col("rowCount")).as("checked"))
-      assembleVerdicts(spark, rules, violations, checked)
+      assembleVerdicts(spark, rules, violations, profiles, None)
         .write.mode("overwrite").parquet(s"$sinkDir/verdicts")
 
       ValidationResult(violations,
         spark.read.parquet(s"$sinkDir/verdicts"), profiles)
     } finally {
-      if (cfg.stage == "memory") projection.unpersist()
-      else if (!spark.conf.getOption("spark.graft.keepStage").contains("true")) {
+      if (!spark.conf.getOption("spark.graft.keepStage").contains("true")) {
         // every output is written; drop the intermediate materialization
         // (at 100 TB the stage is ~1% of the input but still real storage)
         val p = new org.apache.hadoop.fs.Path(s"$sinkDir/_stage")
@@ -393,47 +326,18 @@ object ValidationEngine {
     }
   }
 
-  /** Multi-scan sink path: each phase is its own column-pruned scan of the
-    * source (see EngineConfig.stage).
+  /** Per-partition verdicts for partition-scoped rules, checked = the
+    * part's profiled row count; one "(global)" verdict per global rule
+    * (uniqueness) with checked = total rows. `globalChecked` overrides the
+    * global rules' checked count for callers whose uniqueness pass scanned
+    * more rows than the per-partition passes (incremental resume runs
+    * uniqueness over the FULL table).
     */
-  private def runToSinkMultiScan(df: DataFrame, rules: Seq[ValidationRule],
-      dims: Map[String, DataFrame], cfg: EngineConfig,
-      sinkDir: String): ValidationResult = {
-    val spark = df.sparkSession
-    val uniqueRules = rules.collect { case r: Unique => r }
-
-    val rowVios = rowPass(df, rules, dims, cfg)
-    val uniqVios = uniqueRules.map(r =>
-      Uniqueness.duplicateKeyViolations(df, r))
-    (Seq(rowVios) ++ uniqVios).reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$sinkDir/violations")
-
-    StatsPass.profile(df, cfg)
-      .write.mode("overwrite").parquet(s"$sinkDir/profiles")
-    cfg.histograms.foreach { case (n, e, w) =>
-      StatsPass.histogram(df, cfg, e, w)
-        .write.mode("overwrite").parquet(s"$sinkDir/hist_$n")
-    }
-
-    val violations = spark.read.parquet(s"$sinkDir/violations")
-    val profiles = spark.read.parquet(s"$sinkDir/profiles")
+  private def assembleVerdicts(spark: SparkSession,
+      rules: Seq[ValidationRule], violations: DataFrame,
+      profiles: DataFrame, globalChecked: Option[Long]): DataFrame = {
     val checked = profiles.groupBy(col("part"))
       .agg(max(col("rowCount")).as("checked"))
-    assembleVerdicts(spark, rules, violations, checked)
-      .write.mode("overwrite").parquet(s"$sinkDir/verdicts")
-    ValidationResult(violations,
-      spark.read.parquet(s"$sinkDir/verdicts"), profiles)
-  }
-
-  /** Per-partition verdicts for partition-scoped rules; one "(global)"
-    * verdict per global rule (uniqueness) with checked = total rows.
-    * `globalChecked` overrides the global rules' checked count for callers
-    * whose uniqueness pass scanned more rows than the per-partition passes
-    * (incremental resume runs uniqueness over the FULL table).
-    */
-  private[engine] def assembleVerdicts(spark: SparkSession,
-      rules: Seq[ValidationRule], violations: DataFrame,
-      checked: DataFrame, globalChecked: Option[Long] = None): DataFrame = {
     val uniqueIds = rules.collect { case r: Unique => r.ruleId }
     val partRules = rules.filterNot(r => uniqueIds.contains(r.ruleId))
     val vioCounts = violations.groupBy(col("part"), col("rule_id"))
@@ -451,7 +355,9 @@ object ValidationEngine {
       val checkedGlobal = globalChecked match {
         case Some(n) => checked.sparkSession.range(1)
           .select(lit(n).as("checked"))
-        case None => checked.agg(sum(col("checked")).as("checked"))
+        // coalesce: an empty input has no parts, and sum() of nothing is NULL
+        case None =>
+          checked.agg(coalesce(sum(col("checked")), lit(0L)).as("checked"))
       }
       checkedGlobal
         .select(lit(GlobalPart).as("part"), col("checked"))

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Lowers [[RowRule]]s to Catalyst `Column` expressions (SURVEY.md §7
-  * pillar 1): every rule becomes a `when(violated, struct(...))` branch of
-  * ONE `array<struct>` violations column, evaluated in a single
-  * whole-stage-codegen pass over the scan — no UDFs, no RDDs.
+  * pillar 1): [[violated]] is each rule's condition — no UDFs, no RDDs.
+  * The engine's row pass (`ValidationEngine.rowPass`) turns the conditions
+  * into one violation bitmask per row. [[withViolations]] keeps the
+  * `array<struct>` column form: it is the reference form the engine is
+  * tested against, and the form the streaming window checks aggregate.
   *
   * Reference semantics: a violation row mirrors a DRF serializer error
   * (`cerberus/api/serializers.py:65`, `{field: [messages]}`) — rule id,
@@ -74,10 +76,9 @@ object RuleCompiler {
   /** All row rules compiled to one compact `array<struct>` column.
     *
     * NOTE: the null-compaction uses the higher-order `filter`, which is
-    * CodegenFallback — convenient for streaming aggregations and tests,
-    * but the batch hot path (ValidationEngine.rowPass / buildProjection)
-    * deliberately uses raw `array(...)` + explode + IS NOT NULL instead,
-    * which stays entirely inside whole-stage codegen.
+    * CodegenFallback. This is the reference form and the streaming-window
+    * form only; the engine's row pass uses the codegen'd violation
+    * bitmask instead (`ValidationEngine.rowPass`).
     */
   def violationsArray(rules: Seq[RowRule]): Column =
     if (rules.isEmpty) array().cast("array<struct<rule_id:string,path:string,message:string,severity:string>>")

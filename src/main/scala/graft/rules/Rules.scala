@@ -36,8 +36,8 @@ sealed trait ValidationRule extends Serializable {
   def message: String
 }
 
-/** Rules evaluable row-at-a-time — compiled into one `array<struct>`
-  * violations column in a single whole-stage-codegen pass.
+/** Rules evaluable row-at-a-time — each compiled to one bit of the
+  * engine's violation bitmask in a single whole-stage-codegen pass.
   */
 sealed trait RowRule extends ValidationRule
 

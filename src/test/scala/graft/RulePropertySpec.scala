@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.engine.Uniqueness
+import graft.engine.{EngineConfig, Uniqueness, ValidationEngine}
 import graft.rules._
 
 /** Property tests (fixed seeds → deterministic): the Catalyst-compiled
@@ -77,14 +77,21 @@ class RulePropertySpec extends SparkSuite {
     val rows = sample(rowGen, 400, seed0 = 1000L)
       .zipWithIndex.map { case (r, i) => r.copy(_1 = i.toLong) }
     val df = rows.toDF("id", "url", "lang", "n", "state", "slot")
-    val got = RuleCompiler.withViolations(df, catalog)
-      .select($"id", explode($"_violations.rule_id").as("rule_id"))
-      .as[(Long, String)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      .withDefaultValue(Set.empty[String])
-    rows.foreach { r =>
-      assert(got(r._1) === expectedRuleIds(r),
-        s"row $r: engine=${got(r._1)} expected=${expectedRuleIds(r)}")
+    // the reference array<struct> form and the engine's bitmask row pass
+    val passes = Seq(
+      "withViolations" -> RuleCompiler.withViolations(df, catalog)
+        .select($"id", explode($"_violations.rule_id").as("rule_id")),
+      "rowPass" -> ValidationEngine.rowPass(df, catalog, Map.empty,
+          EngineConfig(keyExpr = "id", partExpr = "'all'"))
+        .select($"key".cast("long").as("id"), $"rule_id"))
+    for ((name, vios) <- passes) {
+      val got = vios.as[(Long, String)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        .withDefaultValue(Set.empty[String])
+      rows.foreach { r =>
+        assert(got(r._1) === expectedRuleIds(r),
+          s"$name row $r: engine=${got(r._1)} expected=${expectedRuleIds(r)}")
+      }
     }
     // the corpus actually exercised every rule (else the property is weak)
     val fired = rows.flatMap(expectedRuleIds).toSet

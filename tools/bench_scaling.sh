@@ -10,14 +10,13 @@
 # beat the cost of decoding its input once, so the control's cpu/row
 # inflation at 4N is the host floor the engine is graded against.
 #
-# Usage: tools/bench_scaling.sh [N] [REPEATS] [STAGE] [OUTDIR]
+# Usage: tools/bench_scaling.sh [N] [REPEATS] [OUTDIR]
 set -e
 set -o pipefail
 N=${1:-1}
 N4=$((N * 4))
 R=${2:-3}
-STAGE=${3:-parquet}
-OUT=${4:-/tmp/graft_scaling_r2}
+OUT=${3:-/tmp/graft_scaling_r2}
 JAR=target/scala-2.13/cerberusspark_2.13-0.1.0.jar
 
 sbt -batch package >/dev/null
@@ -34,7 +33,7 @@ run() { # $1=threads $2=rows $3=pad $4=out
     --conf spark.sql.session.timeZone=UTC \
     --conf spark.sql.adaptive.enabled=true \
     $EXTRA \
-    --class graft.ScalingBench "$JAR" "$2" "$4" "$3" "$STAGE" 2>"$4.err" | tail -1
+    --class graft.ScalingBench "$JAR" "$2" "$4" "$3" 2>"$4.err" | tail -1
   [ -s "$4" ] || { echo "RUN FAILED, stderr follows:"; cat "$4.err"; exit 1; }
 }
 

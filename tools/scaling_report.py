@@ -85,9 +85,8 @@ parquet), via spark-submit at local[{n}] vs local[{n4}] — the sandbox
 stand-in for N vs 4N executors per BASELINE.md. Best-of-R wall clock per
 level; best executor CPU-time per row is the hypervisor-noise-reduced work
 signal (1.0 work efficiency = widening adds zero coordination or duplicated
-work). Strategy: single-decode scalar-bitmask projection staged to parquet
-(`EngineConfig.stage = "parquet"`), independent phase sinks submitted as
-concurrent jobs.
+work). Strategy: single-decode scalar-bitmask projection staged to parquet,
+independent phase sinks submitted as concurrent jobs.
 
 {narrow}
 {wide}
