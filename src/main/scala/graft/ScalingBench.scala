@@ -58,24 +58,7 @@ object ScalingBench {
     // task-metric accumulation: executor CPU time is the hypervisor-noise-
     // reduced scaling signal — constant cpu-time/row across parallelism
     // levels means the engine adds no coordination overhead as it widens
-    val metrics = new graft.tools.CpuMetrics(spark.sparkContext)
-    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        private val jobNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobStarts.put(e.jobId, System.nanoTime())
-          val n = if (e.stageInfos.nonEmpty) e.stageInfos.map(_.name).mkString("|").take(120) else "?"
-          jobNames.put(e.jobId, n)
-        }
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = jobStarts.getOrDefault(e.jobId, 0L)
-          if (t0 > 0 && sys.env.contains("GRAFT_JOB_TRACE"))
-            System.err.println(f"[job] ${e.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.2fs ${jobNames.get(e.jobId)}")
-        }
-      })
+    val metrics = new graft.tools.Profile.Recorder(spark)
 
     // ---- setup (untimed): materialize the input once, reuse across runs
     val inputDir = s"/tmp/graft_bench_pages_${nRows}_w${padTo}_seed42"

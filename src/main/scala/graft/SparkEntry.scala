@@ -758,7 +758,8 @@ object SparkEntry {
         // 22-branch union ships the whole union's task binary to every
         // task, and the branches' post-shuffle segments total ~200
         // partitions — ~200 tasks × ~28 ms deserialization measured
-        // (TailProbe), ~5.5 s of pure overhead for 41 result rows. One
+        // (BENCH.md "Clean-window rerun", round 5), ~5.5 s of pure
+        // overhead for 41 result rows. One
         // partition per fixture-scale branch keeps the engine's internal
         // parallelism (coalesce only collapses the segment after each
         // branch's last exchange) and cuts the fan to 22 tasks.
@@ -1201,7 +1202,7 @@ object SparkEntry {
       // in which batch follows the repartition, not the old file split.
       // Each batch's scan arrives in 8 splits instead of 2 — the signal
       // projection is regex-dense per row, and 2-task batches serialized
-      // it (StageProbe r8: ~0.5 s of task time on 2 tasks per batch)
+      // it (OPTIMIZATION_r08 §6: ~0.5 s of task time on 2 tasks per batch)
       docs.repartition(32).write.mode("overwrite").parquet(s"$tmp/in")
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 8).parquet(s"$tmp/in")
@@ -1688,7 +1689,7 @@ object SparkEntry {
       // parquet is a 1-split file and BOTH the training aggregate and the
       // per-position scoring explode are compute-dense per row — unpinned,
       // the whole tokenizer-class pass serializes on one scan task
-      // (StageProbe r8: 1.7 s single-task stage); a real corpus arrives in
+      // (OPTIMIZATION_r08 §3: 1.7 s single-task stage); a real corpus arrives in
       // thousands of splits and needs no such hint
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(width(s))

@@ -910,7 +910,7 @@ object Dedup {
     // own output for the convergence compare, so counting the PREVIOUS
     // round again (edges.count()) would re-run a job per round for a
     // number the loop just computed — at bench scale the components pass
-    // is sequential-job-bound (StageProbe r8: 64 jobs on q_dedup_keeper),
+    // is sequential-job-bound (OPTIMIZATION_r08 §7: 64 jobs on q_dedup_keeper),
     // and at cluster scale every saved job is a saved scheduling barrier
     var edgeCount = edges.count()
     var converged = edgeCount == 0

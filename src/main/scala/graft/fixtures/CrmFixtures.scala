@@ -217,7 +217,7 @@ object CrmFixtures {
     // exchange plans as LocalTableScanExec with up to
     // leafNodeDefaultParallelism slices — at local[32] that is ONE ROW
     // PER TASK for these 4-16-row tables, and the replay's 22 branches
-    // then pay ~100 ms of fixed task cost per row (StageProbe r8:
+    // then pay ~100 ms of fixed task cost per row (OPTIMIZATION_r08 §9:
     // 277 tasks / 24 s task time for 41 result rows). Fixture volume is
     // KBs by definition, so a single slice per table is the honest
     // shape; the engine's own parallelism downstream is untouched.

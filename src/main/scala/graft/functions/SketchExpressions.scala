@@ -237,8 +237,8 @@ case class WordWindowHashes(child: Expression, k: Int)
   * ~120-token docs (interpreted per array element); this loop is the same
   * computation at ~2 µs/row warm (~600x; first run ~11 µs with plan
   * overhead) — the difference between a feasible and an
-  * infeasible per-doc quality pass at 10^12 docs (NgramProbe records the
-  * measurement).
+  * infeasible per-doc quality pass at 10^12 docs (BENCH.md
+  * "Repetition-signal hot loop", round 4, records the measurement).
   *
   * Exact-parity contract with the columnar form (pinned in
   * TextFunctionsSpec): tokens are maximal runs of non-`\s` chars (Java

@@ -35,16 +35,15 @@ import graft.engine.{EngineConfig, ValidationEngine}
   *
   * Returns (kept corpus with its shard column, per-stage report of
   * surviving doc counts). Stage boundaries pass through `materialize`
-  * (default `localCheckpoint(eager = false)`) so the report's count
-  * branches and the near-dup/quality sub-plans share ONE computation of
-  * each stage instead of re-executing prefixes (~25% off the composed
-  * run at sf0.1; the shared-stage structure, not the constant, is the
-  * point at scale). Note AQE materializes a checkpointed plan's shuffle
-  * stages when the plan is first consumed, so "lazy" here means
-  * computed-once, not deferred-past-build. Pass `identity` for pure
-  * lineage (executor storage scarcer than recompute), or a persistent
-  * write for a production pipeline whose stage outputs are deliverables
-  * anyway.
+  * (`localCheckpoint(eager = false)`) so the report's count branches and
+  * the near-dup/quality sub-plans share ONE computation of each stage
+  * instead of re-executing prefixes (~25% off the composed run at sf0.1;
+  * the shared-stage structure, not the constant, is the point at scale).
+  * Note AQE materializes a checkpointed plan's shuffle stages when the
+  * plan is first consumed, so "lazy" here means computed-once, not
+  * deferred-past-build. Local checkpoint blocks are lost with their
+  * executor; `materialize` is the one place a staging policy that
+  * survives executor loss would go.
   *
   * Every stage is independently SQL-re-derivable (fingerprint groups ==
   * canonical-text groups absent 2^-64 hash collisions; LSH pairs == exact
@@ -53,6 +52,8 @@ import graft.engine.{EngineConfig, ValidationEngine}
   * oracle the WHOLE pipeline end-to-end (`q_corpus_pipeline`).
   */
 object CorpusPipeline {
+
+  private val materialize: DataFrame => DataFrame = _.localCheckpoint(false)
 
   def build(docs: DataFrame, idCol: String, textCol: String,
       langCol: String, partCol: String,
@@ -97,8 +98,7 @@ object CorpusPipeline {
       // authority, order = doc_id (deterministic), via the exact
       // two-phase salted [[Sampling.capPerKey]] — the skew-proof form a
       // mega-host needs. Requires `canonicalizeUrlCol`.
-      maxDocsPerKey: Option[Int] = None,
-      materialize: DataFrame => DataFrame = _.localCheckpoint(false))
+      maxDocsPerKey: Option[Int] = None)
       : (DataFrame, DataFrame) = {
     require(Set("greedy", "components")(nearDupStrategy), nearDupStrategy)
     require(maxDocsPerKey.isEmpty || canonicalizeUrlCol.isDefined,

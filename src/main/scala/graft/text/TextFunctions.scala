@@ -211,8 +211,8 @@ object TextFunctions {
     * expression: the higher-order-function formulation (kept as
     * `duplicateNgramFractionHof`, the spec's independent reference)
     * measured ~1.2 ms/row on ~120-token docs — interpreted per array
-    * element — versus ~2 µs/row warm for the loop, ~600x (NgramProbe;
-    * VERDICT r3 item 6).
+    * element — versus ~2 µs/row warm for the loop, ~600x (BENCH.md
+    * "Repetition-signal hot loop", round 4; VERDICT r3 item 6).
     */
   def duplicateNgramFraction(c: Column, n: Int): Column =
     org.apache.spark.sql.GraftColumnShim.column(

@@ -19,7 +19,7 @@ object DecodeProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new CpuMetrics(spark.sparkContext)
+    val metrics = new Profile.Recorder(spark)
     val df = spark.read.parquet(input)
     val t0 = System.nanoTime()
     val Array(rows, bytes) = df.select(count(lit(1)),

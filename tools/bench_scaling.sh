@@ -11,6 +11,9 @@
 # inflation at 4N is the host floor the engine is graded against.
 #
 # Usage: tools/bench_scaling.sh [N] [REPEATS] [OUTDIR]
+# Writes the rendered report to OUTDIR/scaling.md and prints it; BENCH.md
+# is never overwritten (its header is this report, the rest is round
+# evidence).
 set -e
 set -o pipefail
 N=${1:-1}
@@ -67,5 +70,5 @@ for i in $(seq "$R"); do
   decode "$N4" "$NARROW_IN" "$OUT/ndecode_n${N4}_r${TS}.json"
 done
 
-python3 tools/scaling_report.py "$N" "$N4" "$OUT" > BENCH.md
-cat BENCH.md
+python3 tools/scaling_report.py "$N" "$N4" "$OUT" > "$OUT/scaling.md"
+cat "$OUT/scaling.md"

@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
-"""Renders BENCH.md from the scaling-run JSONs written by
-tools/bench_scaling.sh (graft.ScalingBench + graft.tools.DecodeProbe)."""
+"""Renders the scaling report from the scaling-run JSONs written by
+tools/bench_scaling.sh (graft.ScalingBench + graft.tools.DecodeProbe) to
+stdout. bench_scaling.sh saves it as OUTDIR/scaling.md; BENCH.md's header
+is a copy of it, pasted by hand above the round evidence."""
 import json, glob, sys, subprocess, time
 
 n, n4 = int(sys.argv[1]), int(sys.argv[2])
@@ -110,15 +112,29 @@ written outputs.
 ## Exact commands
 
 ```
-tools/bench_scaling.sh {n} <repeats> parquet
+tools/bench_scaling.sh {n} <repeats> [outdir]   # report: <outdir>/scaling.md
 # which runs, per level L in {{{n},{n4}}}:
 /opt/spark/bin/spark-submit --master local[L] --driver-memory 20g \\
   --conf spark.sql.shuffle.partitions=L --conf spark.sql.session.timeZone=UTC \\
   --conf spark.sql.adaptive.enabled=true \\
   [--conf spark.sql.files.maxPartitionBytes=16m]   # wide only \\
   --class graft.ScalingBench target/scala-2.13/cerberusspark_2.13-0.1.0.jar \\
-  <rows> out.json <padTo> parquet
+  <rows> out.json <padTo>
 ```
+
+Per-query profiles of the 107-query set (jobs, stages, tasks, executor
+CPU, shuffle and spill bytes, per-stage task-time skew, operator row
+counts) are in `PROFILE.jsonl`, one JSON line per query:
+
+```
+SPARK_GRAFT_SF_DIR=<sf0.1 dir> SPARK_GRAFT_CPUS=4 \\
+  sbt -batch "runMain graft.tools.Profile all" \\
+  | sed -n 's/^\\[info\\] \\({{.*\\)$/\\1/p' > PROFILE.jsonl
+```
+
+`graft.tools.Profile` replaced the one-off probe mains the round sections
+below cite (StageProbe, TailProbe, NgramProbe, ComponentsProbe, ...);
+their code stays in git history.
 
 Input fingerprint: seed=42, schema=(url string, warc_ts timestamp,
 html binary, text string, lang string), 10 daily partitions, generated by
